@@ -19,7 +19,7 @@ else
 endif
 export
 
-.PHONY: all bench clean compile docker docker-build docker-run help it-clickhouse package run test verify
+.PHONY: all bench clean compile docker docker-build docker-run help it-clickhouse package perf-etl run test verify
 
 help: ## Show this help message
 	@echo "Available commands:"
@@ -43,6 +43,9 @@ verify: ## Dump all queries at SF_DIR and compare against the DuckDB oracle
 bench: ## Time every query at BENCH_SF_DIR (one JSON line + bench_local.json)
 	@echo "Running benchmark at $(BENCH_SF_DIR)..."
 	SPARK_GRAFT_SF_DIR=$(BENCH_SF_DIR) sbt -batch "runMain graft.Bench"
+
+perf-etl: ## Traced etl_tail benchmark run: per-layer ETL metrics (perfbench/)
+	python3 perfbench/run.py --workload etl_tail --seed 1 --seconds 30 --trace 1
 
 all: compile test verify ## Run all checks (no mutations)
 	@echo "All checks completed successfully!"

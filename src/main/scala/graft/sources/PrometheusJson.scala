@@ -30,8 +30,35 @@ object PrometheusJson {
         StructField("metric", MapType(StringType, StringType)),
         StructField("values", ArrayType(ArrayType(StringType))))))))))))
 
+  /** Decode a string column of query_range JSON responses: one row per
+    * NON-BLANK input line (blank lines are not documents), each JSON
+    * document parsed exactly once:
+    *
+    *   doc_ok   the document's verdict — valid JSON, status "success",
+    *            resultType "matrix"; never NULL
+    *   result   `data.result`, the series array [[parseDecoded]] explodes
+    *
+    * [[parse]] silently contributes zero rows for a malformed document
+    * (fine for ad-hoc queries), but the BATCH LOOP must fail instead —
+    * the reference raises on an invalid response (etl_job.py's status /
+    * parse guards), and a batch that silently drops a truncated drop-dir
+    * file would advance progress past data that was never loaded.
+    * EtlJob.runOnce persists this frame and serves its validity gate,
+    * its stats and its TSV write from it.
+    */
+  def decode(df: DataFrame, jsonCol: String): DataFrame =
+    df.filter(length(trim(col(jsonCol))) > 0)
+      .select(from_json(col(jsonCol), responseSchema).as("r"))
+      // coalesce matters: PERMISSIVE from_json turns corrupt JSON into a
+      // struct of NULL fields, so the conjunction is NULL (not false) —
+      // exactly the rows the gate exists to catch
+      .select(coalesce(
+        col("r").isNotNull && col("r.status") === "success" &&
+          col("r.data.resultType") === "matrix", lit(false)).as("doc_ok"),
+        col("r.data.result").as("result"))
+
   /** Parse a string column of query_range JSON responses into one row
-    * per (series, point):
+    * per (series, point) — [[parseDecoded]] over [[decode]]:
     *
     *   name          __name__ label ("" when absent, like metric.get)
     *   label_keys    remaining labels' keys, sorted (R1)
@@ -45,31 +72,17 @@ object PrometheusJson {
     * Malformed responses (wrong status / resultType / unparseable JSON)
     * contribute zero rows, like the reference's fail-fast guard.
     */
-  /** Per-document validity: one row per NON-BLANK input line with its
-    * parse verdict. [[parse]] silently contributes zero rows for a
-    * malformed document (fine for ad-hoc queries), but the BATCH LOOP
-    * must fail instead — the reference raises on an invalid response
-    * (etl_job.py's status/parse guards), and a batch that silently
-    * drops a truncated drop-dir file would advance progress past data
-    * that was never loaded. EtlJob.runOnce gates on this frame; blank
-    * lines are not documents and don't count.
-    */
-  def docValidity(df: DataFrame, jsonCol: String): DataFrame =
-    df.filter(length(trim(col(jsonCol))) > 0)
-      .withColumn("r", from_json(col(jsonCol), responseSchema))
-      // coalesce matters: PERMISSIVE from_json turns corrupt JSON into a
-      // struct of NULL fields, so the conjunction is NULL (not false) —
-      // exactly the rows the gate exists to catch
-      .select(coalesce(
-        col("r").isNotNull && col("r.status") === "success" &&
-          col("r.data.resultType") === "matrix", lit(false)).as("doc_ok"))
+  def parse(df: DataFrame, jsonCol: String): DataFrame =
+    parseDecoded(decode(df, jsonCol))
 
-  def parse(df: DataFrame, jsonCol: String): DataFrame = {
-    val series = df
-      .withColumn("r", from_json(col(jsonCol), responseSchema))
-      .filter(col("r.status") === "success" &&
-        col("r.data.resultType") === "matrix")
-      .select(explode(col("r.data.result")).as("s"))
+  /** [[parse]] over an already [[decode]]d frame. */
+  def parseDecoded(decoded: DataFrame): DataFrame = {
+    // the verdict gates INSIDE the generator (explode of NULL emits no
+    // rows) rather than as a Filter: a Filter on doc_ok would be pushed
+    // below the decode projection with from_json substituted for it,
+    // parsing every document a second time
+    val series = decoded
+      .select(explode(when(col("doc_ok"), col("result"))).as("s"))
     val labels = map_filter(col("s.metric"), (k, _) => k =!= "__name__")
     val keys = array_sort(map_keys(labels))
     // CRITICAL plan shape: the label expressions live in their OWN

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.logging.StructuredLogger
 import graft.sources.PrometheusJson
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's main batch loop (etl_job.py run(): load state → calc
@@ -29,41 +29,39 @@ object EtlJob {
     "etl_job", sys.env.getOrElse("LOG_LEVEL", "INFO"))
 
   /** get_state (clickhouse_client.py:219-296): the latest VALID COMPLETED
-    * ledger record — progress set, end set, end > start — ordered by
-    * timestampStart. Invalid/open records are skipped, which is what
-    * makes a crashed run harmless. */
-  def latestState(ledger: Dataset[LedgerRecord]): Option[LedgerRecord] = {
-    import ledger.sparkSession.implicits._
-    ledger
-      .filter(r => r.timestampProgress.isDefined &&
+    * ledger record — progress set, end set, end > start — by highest
+    * timestampStart, ties to the highest `seq`. Invalid/open records are
+    * skipped, which is what makes a crashed run harmless. */
+  def latestState(ledger: Seq[LedgerRecord]): Option[LedgerRecord] =
+    ledger.filter(r => r.timestampProgress.isDefined &&
         r.timestampEnd.exists(_ > r.timestampStart))
-      .orderBy(col("timestampStart").desc)
-      .limit(1).collect().headOption
-  }
+      .maxByOption(r => (r.timestampStart, r.seq))
 
-  def readLedger(spark: SparkSession, ledgerDir: String): Dataset[LedgerRecord] = {
+  /** One snapshot of the ledger: a single scan with the record schema
+    * given up front (no footer read to infer it), collected to the
+    * driver — the ledger is a handful of small records per iteration,
+    * and every decision of a gate is taken on the same snapshot. */
+  def readLedger(spark: SparkSession, ledgerDir: String): Seq[LedgerRecord] = {
     import spark.implicits._
     if (new java.io.File(ledgerDir).exists())
-      spark.read.parquet(ledgerDir).as[LedgerRecord]
-    else spark.emptyDataset[LedgerRecord]
+      spark.read.schema(Encoders.product[LedgerRecord].schema)
+        .parquet(ledgerDir).as[LedgerRecord].collect().toSeq
+    else Nil
   }
 
   /** R8 probe over the persisted ledger (has_running_job,
     * clickhouse_client.py:440-524): any (job, start) whose latest
     * record is still open means a run is in flight (or died mid-run). */
   def hasRunningJob(spark: SparkSession, ledgerDir: String): Boolean =
-    JobStateMachine.runningJobs(readLedger(spark, ledgerDir))
-      .limit(1).count() > 0
+    JobStateMachine.runningJobs(readLedger(spark, ledgerDir)).nonEmpty
 
   /** seq = max(existing)+1, NOT System.nanoTime(): nanoTime has an
     * arbitrary per-boot origin, so after a reboot (the crash-recovery
     * scenario this ledger exists for) fresh records could sort BELOW
     * older ones and the latest-wins read would resurrect stale state.
     * Deriving from the ledger itself is monotonic across restarts. */
-  private def maxSeq(ledger: Dataset[LedgerRecord]): Long = {
-    val m = ledger.agg(max(col("seq"))).head()
-    if (m.isNullAt(0)) 0L else m.getLong(0)
-  }
+  def maxSeq(ledger: Seq[LedgerRecord]): Long =
+    ledger.map(_.seq).maxOption.getOrElse(0L)
 
   /** try_mark_start (clickhouse_client.py:536-613): atomically append
     * this job's OPEN ledger record iff NO job is currently running.
@@ -79,7 +77,7 @@ object EtlJob {
     import spark.implicits._
     LedgerLock.withLock(ledgerDir) {
       val ledger0 = readLedger(spark, ledgerDir)
-      val running = JobStateMachine.runningJobs(ledger0).collect().toSeq
+      val running = JobStateMachine.runningJobs(ledger0)
       if (running.nonEmpty) {
         logger.info(s"Found ${running.size} running job(s)", Map(
           "clickhouse_client.has_running_job.running_count" -> running.size,
@@ -103,76 +101,85 @@ object EtlJob {
     *     THIS job is already running unless `force` — `force` is the
     *     operator's manual takeover after a crashed run (abort-closes
     *     only this job's stale records)
-    *  2. progress ← latest valid completed ledger record (or initial)
+    *  2. progress ← latest valid completed ledger record (or initial);
+    *     (window_start, window_end) ← calcWindow(progress) — R6. When
+    *     the caller already fetched a window (`fetchedWindow`), a
+    *     different one means another run closed a window since the
+    *     fetch: refuse before anything is written
     *  3. append the OPEN record — mark-start; a crash after this point
     *     leaves the open record as the tombstone the next gate trips
     *     on, exactly like the reference
-    *  4. (window_start, window_end) ← calcWindow(progress) — R6
-    *  5. parse the drop-dir responses, keep points in [start, end) —
-    *     the query_range the reference would have issued
-    *  6. bulk-write TabSeparated part-files (idempotent: content-hashed
+    *  4. decode the drop-dir responses once, fail on a malformed one,
+    *     keep points in [start, end) — the query_range the reference
+    *     would have issued
+    *  5. bulk-write TabSeparated part-files (idempotent: content-hashed
     *     rows collapse in a ReplacingMergeTree, R5/R9)
-    *  7. append the CLOSED record with progress = min(end, now),
+    *  6. append the CLOSED record with progress = min(end, now),
     *     rows/skipped accounting — mark-end (R7)
-    * Returns the closed record it wrote.
+    * Returns the closed record it wrote. The completion event carries
+    * the stage durations: `gate_ms` (steps 1-3, lock wait included),
+    * `parse_ms` (the decode and its validity check) and `write_ms` (the
+    * point explode, TSV write and mark-end).
     */
   def runOnce(spark: SparkSession, conf: EtlConfig, jobId: String,
               inDir: String, outDir: String, ledgerDir: String,
               initialProgress: Long, now: Long,
               force: Boolean = false,
-              logger: StructuredLogger = defaultLogger): LedgerRecord = {
+              logger: StructuredLogger = defaultLogger,
+              fetchedWindow: Option[(Long, Long)] = None): LedgerRecord = {
     import spark.implicits._
+    val t0 = System.nanoTime()
+    def msSince(t: Long): Long = (System.nanoTime() - t) / 1000000L
     // --- critical section: gate + mark-start are atomic across
     // processes; everything after rides on the open record ---
-    val (progress, closedSeq) = LedgerLock.withLock(ledgerDir) {
+    val (progress, (start, end), closedSeq) = LedgerLock.withLock(ledgerDir) {
+      // one ledger snapshot serves the gate, the takeover list, progress
+      // and the seq stamps — every check below is decided before the
+      // first append
       val ledger0 = readLedger(spark, ledgerDir)
       var nextSeq = maxSeq(ledger0) + 1L
       def stamp(r: LedgerRecord): LedgerRecord = {
         val s = nextSeq; nextSeq += 1L; r.copy(seq = s)
       }
-      // one ledger pass serves the gate, the takeover list, and progress
-      val mine = JobStateMachine.runningJobs(ledger0)
-        .filter(_._1 == jobId).collect().toSeq
-      if (mine.nonEmpty) {
-        if (!force) throw new IllegalStateException(
-          s"job $jobId already running in $ledgerDir (latest record open); " +
-            "pass force=true to take over")
-        // takeover: close THIS job's stale open records with an ABORT
-        // close — end set (stops counting as running) but progress NULL
-        // (state reads never resume from it). Other jobs' in-flight runs
-        // are untouched. The reference-side equivalent is the operator
-        // inserting a closing row by hand.
+      val mine = JobStateMachine.runningJobs(ledger0).filter(_._1 == jobId)
+      if (mine.nonEmpty && !force) throw new IllegalStateException(
+        s"job $jobId already running in $ledgerDir (latest record open); " +
+          "pass force=true to take over")
+      val progress = latestState(ledger0)
+        .flatMap(_.timestampProgress).getOrElse(initialProgress)
+      val window = JobStateMachine.calcWindow(progress, conf)
+      if (fetchedWindow.exists(_ != window)) throw new IllegalStateException(
+        s"job $jobId fetched window ${fetchedWindow.get} but the ledger " +
+          s"now gives $window in $ledgerDir — another run closed a window " +
+          "since the fetch; re-fetch and retry")
+      // takeover: close THIS job's stale open records with an ABORT
+      // close — end set (stops counting as running) but progress NULL
+      // (state reads never resume from it). Other jobs' in-flight runs
+      // are untouched. The reference-side equivalent is the operator
+      // inserting a closing row by hand.
+      if (mine.nonEmpty)
         mine.map { case (jid, start) =>
           stamp(LedgerRecord(jid, start, Some(math.max(now, start + 1)),
             None, None, None, None))
         }.toDS().write.mode("append").parquet(ledgerDir)
-      }
-      val progress = latestState(ledger0)
-        .flatMap(_.timestampProgress).getOrElse(initialProgress)
       val (records, _) = JobStateMachine.step(
         jobId, progress, BatchEvent(jobId, now, 0L, 0L), conf)
       Seq(stamp(records.head)).toDS().write.mode("append").parquet(ledgerDir)
-      (progress, nextSeq)
+      (progress, window, nextSeq)
     }
+    val gateMs = msSince(t0)
 
-    val (start, end) = JobStateMachine.calcWindow(progress, conf)
     logger.info("ETL batch started", Map(
       "etl_job.batch_started.job_id" -> jobId,
       "etl_job.batch_started.window_start" -> start,
       "etl_job.batch_started.window_end" -> end,
       "etl_job.batch_started.progress" -> progress))
-    // One raw read of the drop-dir per iteration: the validity gate and
-    // parse() both consume this cached frame, so the gate costs a cached
-    // scan, not a second read+parse job — and a file landing between the
+    val t1 = System.nanoTime()
+    // One read and one JSON decode of the drop-dir per iteration: the
+    // validity gate and the sink write both consume this cached frame,
+    // so no document is parsed twice — and a file landing between the
     // two cannot make the gate and the load disagree about dir contents.
-    val raw = spark.read.text(inDir).persist()
-    // persist: the stats aggregation AND the sink write both consume the
-    // parsed window — without it the whole drop-dir is read and parsed
-    // twice per iteration, and a file landing between the two jobs would
-    // make batchRows disagree with what the sink actually wrote
-    val parsed = PrometheusJson.parse(raw, "value")
-      .filter(col("ts_us") >= start * 1000000L &&
-        col("ts_us") < end * 1000000L)
+    val decoded = PrometheusJson.decode(spark.read.text(inDir), "value")
       .persist()
     try {
       // FAIL-FAST on malformed response documents (reference parity: the
@@ -186,18 +193,23 @@ object EtlJob {
       // removed — stricter than the reference's per-response check, by
       // design (a drop-dir is an ingest queue; corruption anywhere in it
       // is an operator-attention event, not a skippable row).
-      val nBad = PrometheusJson.docValidity(raw, "value")
-        .filter(!col("doc_ok")).count()
+      val nBad = decoded.filter(!col("doc_ok")).count()
       if (nBad > 0) throw new IllegalStateException(
         s"$nBad malformed response document(s) in $inDir — failing the " +
           "batch (repair or remove them, then force-take-over)")
-      val stats = parsed.agg(
-        sum(when(col("ok"), 1L).otherwise(0L)),
-        sum(when(!col("ok"), 1L).otherwise(0L))).head()
-      val (rows, skipped) =
-        (if (stats.isNullAt(0)) 0L else stats.getLong(0),
-          if (stats.isNullAt(1)) 0L else stats.getLong(1))
+      val parseMs = msSince(t1)
+      val t2 = System.nanoTime()
+      // rows/skipped ride on the sink write as observed metrics: they
+      // count exactly the points the sink consumed, in the same pass
+      val stats = Observation("etl_job.batch_stats")
+      val parsed = PrometheusJson.parseDecoded(decoded)
+        .filter(col("ts_us") >= start * 1000000L &&
+          col("ts_us") < end * 1000000L)
+        .observe(stats, count_if(col("ok")).as("rows"),
+          count_if(!col("ok")).as("skipped"))
       graft.sinks.TsvSink.write(PrometheusJson.metricRows(parsed), outDir)
+      val rows = stats.get("rows").asInstanceOf[Long]
+      val skipped = stats.get("skipped").asInstanceOf[Long]
 
       val closed = JobStateMachine.step(
         jobId, progress, BatchEvent(jobId, now, rows, skipped), conf)
@@ -210,7 +222,10 @@ object EtlJob {
         "etl_job.batch_completed.progress" ->
           closed.timestampProgress.getOrElse(-1L),
         "etl_job.batch_completed.window_seconds" ->
-          closed.batchWindowSeconds.getOrElse(-1L)))
+          closed.batchWindowSeconds.getOrElse(-1L),
+        "etl_job.batch_completed.gate_ms" -> gateMs,
+        "etl_job.batch_completed.parse_ms" -> parseMs,
+        "etl_job.batch_completed.write_ms" -> msSince(t2)))
       closed
     } catch {
       case e: Exception =>
@@ -219,6 +234,6 @@ object EtlJob {
           "etl_job.batch_failed.error" -> e.toString,
           "etl_job.batch_failed.error_type" -> e.getClass.getSimpleName))
         throw e
-    } finally { parsed.unpersist(); raw.unpersist() }
+    } finally decoded.unpersist()
   }
 }

@@ -19,10 +19,14 @@ import org.apache.spark.sql.SparkSession
   * crashed load never re-sends older batches (and re-sending is safe
   * anyway: content-hash ids collapse in ReplacingMergeTree, R5/R9).
   *
-  * The fetch window is computed from the same ledger state `runOnce`
-  * will read; with the [[LedgerLock]]-serialized gate a racing second
-  * orchestrator may at worst duplicate the FETCH (harmless) — it can
-  * never double-run the batch.
+  * The fetch window is computed from the ledger before the fetch, and
+  * `runOnce` re-checks it against the ledger inside the
+  * [[LedgerLock]]-serialized gate: if a racing orchestrator closed a
+  * window in between, the batch refuses before mark-start (nothing is
+  * written, progress stays where the other run left it) instead of
+  * filtering the fetched response to a window it does not cover. A race
+  * can at worst waste one FETCH — it can never double-run a batch or
+  * skip data.
   */
 object EtlPipeline {
 
@@ -53,8 +57,10 @@ object EtlPipeline {
 
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
     val responseFile = s"$inDir/response_${start}_$end.json"
+    val t0 = System.nanoTime()
     prom.queryRangeToFile(expr, start, end,
       s"${app.prometheus.queryStepSeconds}s", responseFile)
+    val fetchMs = (System.nanoTime() - t0) / 1000000L
     logger.info("Fetched query_range window", Map(
       "etl_pipeline.fetched.window_start" -> start,
       "etl_pipeline.fetched.window_end" -> end,
@@ -63,7 +69,8 @@ object EtlPipeline {
     val batchOut = s"$outDir/batch_${start}_$end"
     val closed =
       try EtlJob.runOnce(spark, conf, jobId, inDir, batchOut,
-        ledgerDir, initialProgress, now, force, logger)
+        ledgerDir, initialProgress, now, force, logger,
+        fetchedWindow = Some((start, end)))
       finally {
         // the reference deletes its per-batch temp file whether the run
         // succeeded or not (etl_job create_temp_file + cleanup); here it
@@ -75,11 +82,14 @@ object EtlPipeline {
         ()
       }
 
+    val t1 = System.nanoTime()
     val nParts = ch.loadDir(batchOut)
     logger.info("Loaded batch into ClickHouse", Map(
       "etl_pipeline.loaded.part_files" -> nParts,
       "etl_pipeline.loaded.rows" -> closed.batchRows.getOrElse(-1L),
-      "etl_pipeline.loaded.table" -> "(configured table_metrics)"))
+      "etl_pipeline.loaded.table" -> "(configured table_metrics)",
+      "etl_pipeline.loaded.fetch_ms" -> fetchMs,
+      "etl_pipeline.loaded.load_ms" -> (System.nanoTime() - t1) / 1000000L))
     closed
   }
 

@@ -57,7 +57,7 @@ case class JobProgress(progress: Long)
   *    record for the same start = running job; the keyed state in
   *    `flatMapGroupsWithState` serializes batches per job exactly like
   *    the reference's atomic mark-start, and [[runningJobs]] is the
-  *    has_running_job probe over the emitted ledger.
+  *    has_running_job probe over a collected ledger.
   */
 object JobStateMachine {
 
@@ -166,24 +166,18 @@ object JobStateMachine {
         TimeMode.None(), OutputMode.Append())
   }
 
-  /** R8 probe over a ledger: (job, timestampStart) keys whose LATEST
-    * record (by `seq`, ties resolved toward closed records, mirroring
-    * ReplacingMergeTree keep-latest) is still open — has_running_job,
-    * clickhouse_client.py:440-524. Latest-wins is what makes the gate
-    * survive start-key reuse: an old completed run at the same window
-    * start cannot mask a newer crashed open record, and a takeover's
-    * abort close cannot mask a newer retry. Works on the batch view of
-    * any ledger sink. */
-  def runningJobs(ledger: Dataset[LedgerRecord]): Dataset[(String, Long)] = {
-    import ledger.sparkSession.implicits._
-    ledger
-      .groupByKey(r => (r.jobId, r.timestampStart))
-      .mapGroups { (key: (String, Long), rs: Iterator[LedgerRecord]) =>
-        val latest = rs.maxBy(r =>
-          (r.seq, if (r.timestampEnd.isDefined) 1L else 0L))
-        (key._1, key._2, latest.timestampEnd.isEmpty)
-      }
-      .filter(_._3)
-      .map(t => (t._1, t._2))
-  }
+  /** R8 probe over a ledger snapshot: (job, timestampStart) keys whose
+    * LATEST record (by `seq`, ties resolved toward closed records,
+    * mirroring ReplacingMergeTree keep-latest) is still open —
+    * has_running_job, clickhouse_client.py:440-524. Latest-wins is what
+    * makes the gate survive start-key reuse: an old completed run at the
+    * same window start cannot mask a newer crashed open record, and a
+    * takeover's abort close cannot mask a newer retry. Keys come back
+    * sorted. */
+  def runningJobs(ledger: Seq[LedgerRecord]): Seq[(String, Long)] =
+    ledger.groupBy(r => (r.jobId, r.timestampStart)).toSeq
+      .collect { case (key, rs) if rs.maxBy(r =>
+          (r.seq, if (r.timestampEnd.isDefined) 1 else 0))
+          .timestampEnd.isEmpty => key }
+      .sorted
 }

@@ -53,6 +53,22 @@ class EtlJobSpec extends SparkSpec {
     assert(st.exists(_.timestampStart == 1080))
   }
 
+  test("empty drop-dir: the batch closes with zero rows and advances progress") {
+    val inDir = tmpDir("etl_empty_in")
+    val outDir = tmpDir("etl_empty_out") + "/tsv"
+    val ledgerDir = tmpDir("etl_empty") + "/ledger"
+    val r1 = EtlJob.runOnce(spark, conf, "job", inDir, outDir, ledgerDir,
+      initialProgress = 1000, now = 2000)
+    assert(r1.batchRows.contains(0L) && r1.batchSkippedCount.contains(0L))
+    assert(r1.timestampProgress.contains(1090))
+    // a blank line is not a document either
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(inDir, "blank.json"), "\n")
+    val r2 = EtlJob.runOnce(spark, conf, "job", inDir, outDir, ledgerDir,
+      initialProgress = -1, now = 2000)
+    assert(r2.batchRows.contains(0L) && r2.timestampProgress.contains(1180))
+  }
+
   test("crash recovery: open-only record blocks (R8) and never advances progress") {
     val inDir = tmpDir("etl_crash_in")
     val outDir = tmpDir("etl_crash_out") + "/tsv"
@@ -92,7 +108,7 @@ class EtlJobSpec extends SparkSpec {
       initialProgress = 1000, now = 2000)
     assert(r.jobId == "jobB")
     assert(JobStateMachine.runningJobs(
-      EtlJob.readLedger(spark, ledgerDir)).collect().toSet ==
+      EtlJob.readLedger(spark, ledgerDir)).toSet ==
       Set(("jobA", 500L)))
   }
 }

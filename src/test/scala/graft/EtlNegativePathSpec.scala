@@ -131,6 +131,54 @@ class EtlNegativePathSpec extends SparkSpec {
     } finally { promServer.stop(0); chServer.stop(0) }
   }
 
+  test("window closed by another run between fetch and gate: refuse before mark-start") {
+    import spark.implicits._
+    val ledgerDir = tmpDir("neg_race") + "/ledger"
+    // another orchestrator closes [1000, 1100) while this one is fetching
+    // the same window: the stub appends that closed record to the ledger
+    // before it answers the fetch
+    val raced = LedgerRecord("job", 1000, Some(5000L), Some(1100L),
+      Some(100L), Some(1L), Some(0L), seq = 1)
+    val promServer =
+      HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    promServer.createContext("/api/v1/query_range", (ex: HttpExchange) => {
+      Seq(raced).toDS().write.mode("append").parquet(ledgerDir)
+      val body = fixture(Seq(1005L)).getBytes(StandardCharsets.UTF_8)
+      ex.sendResponseHeaders(200, body.length.toLong)
+      ex.getResponseBody.write(body); ex.close()
+    })
+    val chPosts = new AtomicInteger(0)
+    val chServer = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    chServer.createContext("/", (ex: HttpExchange) => {
+      ex.getRequestBody.readAllBytes(); chPosts.incrementAndGet()
+      ex.sendResponseHeaders(200, -1); ex.close()
+    })
+    promServer.start(); chServer.start()
+    try {
+      val app = EnvConfig.load(Map(
+        "PROMETHEUS_URL" ->
+          s"http://127.0.0.1:${promServer.getAddress.getPort}",
+        "CLICKHOUSE_URL" ->
+          s"http://127.0.0.1:${chServer.getAddress.getPort}/",
+        "BATCH_WINDOW_SIZE_SECONDS" -> "100"))
+      val e = intercept[IllegalStateException] {
+        EtlPipeline.runOnce(spark, app, "job", "up", tmpDir("neg_race_in"),
+          tmpDir("neg_race_out"), ledgerDir, initialProgress = 1000,
+          now = 5000, new PrometheusHttpClient(app.prometheus, quietLogger),
+          new ClickHouseHttpClient(app.clickhouse, quietLogger),
+          logger = quietLogger)
+      }
+      assert(e.getMessage.contains("fetched window"))
+      // refused before mark-start: no open record, nothing appended,
+      // progress is where the other run left it, nothing was loaded
+      assert(!EtlJob.hasRunningJob(spark, ledgerDir))
+      assert(EtlJob.readLedger(spark, ledgerDir) == Seq(raced))
+      assert(EtlJob.latestState(EtlJob.readLedger(spark, ledgerDir))
+        .flatMap(_.timestampProgress).contains(1100L))
+      assert(chPosts.get == 0)
+    } finally { promServer.stop(0); chServer.stop(0) }
+  }
+
   test("ClickHouse load failure lands AFTER mark-end: progress kept, re-send safe") {
     val promServer =
       HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)

@@ -77,12 +77,24 @@ class EtlPipelineSpec extends SparkSpec {
       assert(r1.batchRows.contains(2L))
 
       // iteration 2 resumes from the LEDGER → [1100, 1200) → 1100, 1150
+      val events = new ByteArrayOutputStream()
       val r2 = EtlPipeline.runOnce(spark, app, "job", """{__name__=~".+"}""",
         inDir, outDir, ledgerDir, initialProgress = -1, now = 5000,
-        prom, ch, logger = quietLogger)
+        prom, ch, logger = new StructuredLogger("test", "INFO",
+          new PrintStream(events), new PrintStream(new ByteArrayOutputStream())))
       assert(r2.timestampStart == 1100)
       assert(r2.timestampProgress.contains(1200))
       assert(r2.batchRows.contains(2L))
+      // per-stage durations ride on the existing completion events
+      val log = events.toString(StandardCharsets.UTF_8)
+      Seq("etl_job.batch_completed.gate_ms",
+        "etl_job.batch_completed.parse_ms",
+        "etl_job.batch_completed.write_ms",
+        "etl_pipeline.loaded.fetch_ms",
+        "etl_pipeline.loaded.load_ms").foreach { k =>
+        assert(("\"" + java.util.regex.Pattern.quote(k) + "\":[0-9]+").r
+          .findFirstIn(log).isDefined, k)
+      }
 
       // per-batch response files are cleaned up after the batch (the
       // reference's temp-file cleanup; keeps the drop-dir reparse O(1))

@@ -46,7 +46,7 @@ class MarkStartConcurrencySpec extends SparkSpec {
     assert(results.size == n)
     assert(wins == 1, s"expected exactly 1 winner, got $wins")
     // the ledger holds exactly the winner's open record
-    val records = EtlJob.readLedger(spark, ledgerDir).collect()
+    val records = EtlJob.readLedger(spark, ledgerDir)
     assert(records.length == 1)
     assert(records.head.timestampEnd.isEmpty)
     // and the running-job probe now gates everyone

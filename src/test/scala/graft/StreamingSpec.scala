@@ -38,7 +38,7 @@ class StreamingSpec extends SparkSpec {
     val ledger = Seq(
       LedgerRecord("j", 100, Some(100L), Some(90L), None, None, None), // end == start
       LedgerRecord("j", 200, Some(150L), Some(190L), None, None, None) // end < start
-    ).toDS()
+    )
     assert(JobStateMachine.runningJobs(ledger).isEmpty)
   }
 
@@ -171,8 +171,8 @@ class StreamingSpec extends SparkSpec {
       LedgerRecord("a", 100, None, None, None, None, None),
       LedgerRecord("b", 100, None, None, None, None, None),
       LedgerRecord("b", 100, Some(200L), Some(150L), Some(50L), Some(1L), Some(0L))
-    ).toDS()
-    val r = JobStateMachine.runningJobs(running).collect().toSet
+    )
+    val r = JobStateMachine.runningJobs(running).toSet
     assert(r == Set(("a", 100L)))
   }
 
@@ -183,16 +183,54 @@ class StreamingSpec extends SparkSpec {
     val reused = Seq(
       LedgerRecord("j", 100, Some(200L), Some(150L), Some(50L), Some(1L), Some(0L), seq = 1),
       LedgerRecord("j", 100, None, None, None, None, None, seq = 2)
-    ).toDS()
-    assert(JobStateMachine.runningJobs(reused).collect().toSet ==
+    )
+    assert(JobStateMachine.runningJobs(reused).toSet ==
       Set(("j", 100L)))
     // and the converse: a takeover abort (later seq) over a crashed
     // open record clears the gate
     val aborted = Seq(
       LedgerRecord("j", 100, None, None, None, None, None, seq = 1),
       LedgerRecord("j", 100, Some(101L), None, None, None, None, seq = 2)
-    ).toDS()
+    )
     assert(JobStateMachine.runningJobs(aborted).isEmpty)
+  }
+
+  test("latestState: a tie on timestampStart resolves to the highest seq") {
+    // a takeover retry re-runs the same window: both closed records are
+    // valid, and the later one (higher seq) carries the current progress
+    val retried = Seq(
+      LedgerRecord("j", 100, Some(200L), Some(150L), Some(50L), Some(1L), Some(0L), seq = 4),
+      LedgerRecord("j", 100, Some(300L), Some(160L), Some(60L), Some(2L), Some(0L), seq = 7),
+      LedgerRecord("j", 100, Some(250L), Some(155L), Some(55L), Some(3L), Some(0L), seq = 5),
+      LedgerRecord("j", 40, Some(90L), Some(99L), Some(50L), Some(1L), Some(0L), seq = 9))
+    assert(EtlJob.latestState(retried).map(_.seq).contains(7L))
+    assert(EtlJob.latestState(retried.reverse).map(_.seq).contains(7L))
+  }
+
+  test("empty ledger: no state, no running job, maxSeq 0") {
+    assert(EtlJob.latestState(Nil).isEmpty)
+    assert(JobStateMachine.runningJobs(Nil).isEmpty)
+    assert(EtlJob.maxSeq(Nil) == 0L)
+    assert(EtlJob.maxSeq(Seq(
+      LedgerRecord("j", 100, None, None, None, None, None, seq = 3),
+      LedgerRecord("k", 900, None, None, None, None, None, seq = 2))) == 3L)
+  }
+
+  test("abort-close masks an older open record and never reads as state") {
+    val ledger = Seq(
+      LedgerRecord("j", 0, Some(100L), Some(90L), Some(100L), Some(5L), Some(0L), seq = 1),
+      LedgerRecord("j", 90, None, None, None, None, None, seq = 2),
+      LedgerRecord("k", 90, None, None, None, None, None, seq = 3),
+      // the takeover's abort close: end set, progress NULL
+      LedgerRecord("j", 90, Some(500L), None, None, None, None, seq = 4))
+    assert(JobStateMachine.runningJobs(ledger) == Seq(("k", 90L)))
+    // progress resumes from the last VALID close, not from the abort
+    assert(EtlJob.latestState(ledger).map(_.seq).contains(1L))
+    // records stamped in one pure computation share seq 0: the tie goes
+    // to the close
+    assert(JobStateMachine.runningJobs(Seq(
+      LedgerRecord("j", 90, Some(500L), None, None, None, None),
+      LedgerRecord("j", 90, None, None, None, None, None))).isEmpty)
   }
 
   test("batch/streaming parity through parse + TSV sink") {
