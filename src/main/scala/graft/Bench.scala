@@ -1,4 +1,5 @@
 package graft
+import graft.logging.StructuredLogger.jsonString
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
@@ -29,73 +30,6 @@ import org.apache.spark.sql.SparkSession
   * rounds 2 and 6 to settle driver-vs-builder timing splits.
   */
 object Bench {
-
-  private def buildSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // INITIAL shuffle partitions: default = cores (right for the
-    // fixture SFs), overridable for third-decade probes. AQE only
-    // coalesces DOWN from this number — it never raises it — so
-    // pinning 32 at 100M events makes every sort-heavy shuffle task
-    // sort ~3M rows and go external, a harness artifact a real
-    // 1000-executor cluster would not have (VERDICT_r13 item 1). A
-    // probe at sf100 should set SPARK_GRAFT_SHUFFLE_PARTITIONS≈256
-    // and let AQE shrink the cheap stages.
-    // r15 (guide §2.2 "fewer, larger reduce partitions" — sized to the
-    // DATA, not the core count): the pinned `= cpus` default made every
-    // sort-heavy shuffle task at sf100 sort ~3M rows (100M-row frames
-    // over 32 partitions) and go external — the VERDICT_r13/r14
-    // "phantom superlinearity" harness artifact. The initial partition
-    // count now derives from total input size (×4 parquet→uncompressed
-    // estimate, ~64 MB sort-input per task), floored at the core count;
-    // AQE still coalesces the cheap stages DOWN. At the fixture SFs the
-    // floor selects exactly the old `= cpus` value, so driver numbers
-    // stay comparable; the env override behaves as before.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", {
-        val inputBytes = try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(java.nio.file.Paths.get(
-            sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")))
-            .iterator().asScala
-            .filter(p => p.toString.endsWith(".parquet") &&
-              java.nio.file.Files.isRegularFile(p))
-            .map(java.nio.file.Files.size).sum
-        } catch { case _: Exception => 0L }
-        math.max(cpus.toInt,
-          (inputBytes * 4L / (64L * 1024 * 1024)).toInt).toString
-      })
-    // SCAN-parallelism floor (r14, guide §6.1): a single third-decade
-    // parquet file (sf100 events: 668 MB compressed, 100 row groups)
-    // yields only ~6 splits at the default 128 MB maxPartitionBytes —
-    // the whole map side (parse + projection + partial agg + shuffle
-    // write) ran on 6 of 32 cores, a harness artifact a real cluster
-    // (thousands of natural splits at 100 TB) does not have.
-    // minPartitionNum lets Spark derive the split size from total
-    // input instead; 2×cores keeps every core busy through stragglers.
-    // Scale-adaptive by construction: fixture-SF files already split
-    // past this floor, so driver numbers stay comparable. 0 disables.
-    // malformed value → fall back to the default with a named warning,
-    // never a NumberFormatException that kills the bench (ADVICE_r14)
-    val minScan = sys.env.get("SPARK_GRAFT_MIN_SCAN_PARTITIONS")
-      .flatMap(_.toIntOption match {
-        case None =>
-          System.err.println("[bench] SPARK_GRAFT_MIN_SCAN_PARTITIONS is " +
-            "not an integer — using the 2×cores default")
-          None
-        case some => some
-      }).getOrElse(cpus.toInt * 2).toString
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-    val spark = (if (minScan.toInt > 0)
-      b0.config("spark.sql.files.minPartitionNum", minScan) else b0)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 
   /** Cumulative JVM GC time (ms) across all collectors — the delta
     * around an execution attributes environmental inflation to GC by
@@ -164,7 +98,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
-    val spark = buildSession()
+    val spark = Harness.session("graft-bench", Some(sfDir))
 
     // Warmup: generic shuffle+codegen, then the flagship entry (parquet
     // scan path) on the smallest SF so no measured bytes are pre-cached.
@@ -203,7 +137,7 @@ object Bench {
         if (pf.routeToLsh) exactFamily else Set.empty
       }
     val routedJson = routed.toSeq.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+      .map(jsonString).mkString("[", ",", "]")
     val selected = selected0.view.filterKeys(!routed.contains(_)).toMap
     // Steady-state protocol (VERDICT_r07 item 1): periodically RELEASE
     // the materialize-once frames so a 200+-query run measures per-query
@@ -238,22 +172,22 @@ object Bench {
       val adj = timed.map { case (t, f, _) => if (t < 0) -1.0 else math.max(t - f, 0.0) }
       (name, if (adj.contains(-1.0)) -1.0 else adj.min)
     }
-    val errors = results.collect { case (n, v) if v < 0 => "\"" + n + "\"" }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
+    val errors = results.collect { case (n, v) if v < 0 => jsonString(n) }
+    val qs = results.map { case (k, v) => jsonString(k) + ":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     // per-frame build cost, aggregated over the whole run (a frame can
     // rebuild after each release boundary — builds counts them)
     val frames = graft.operators.MaterializeOnce.buildLogSnapshot
       .groupBy(_.tag).toSeq.sortBy(_._1).map { case (tag, evs) =>
-        s""""$tag":{"builds":${evs.size},"sec":${evs.map(_.seconds).sum}}"""
+        s"""${jsonString(tag)}:{"builds":${evs.size},"sec":${evs.map(_.seconds).sum}}"""
       }.mkString("{", ",", "}")
     // `frames` travels IN the stdout contract line (r15, VERDICT_r14
     // item 7): the driver-visible steady-state total and the
     // materialize-once build cost it excludes are one artifact, so the
     // two can never silently diverge. Additive key — every existing
     // key is unchanged.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":${errors.mkString("[", ",", "]")},"routed_to_lsh":$routedJson,"frames":$frames,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":${errors.mkString("[", ",", "]")},"routed_to_lsh":$routedJson,"frames":$frames,"sf":${jsonString(sfDir)}}""")
 
     // Complete artifact: per-query warmup + all measured timings (raw
     // wall + in-run frame-build seconds + in-run GC ms) + the heap
@@ -269,10 +203,10 @@ object Bench {
       val spread =
         if (adj.contains(-1.0) || adj.min <= 0) -1.0
         else adj.max / adj.min
-      s""""$name":{"warmup":$warmup,"runs":[${timed.map(_._1).mkString(",")}],"frame_sec":[${timed.map(_._2).mkString(",")}],"gc_ms":[${timed.map(_._3).mkString(",")}],"heap_peak_mb":$heapMb,"min":$min,"spread":$spread}"""
+      s"""${jsonString(name)}:{"warmup":$warmup,"runs":[${timed.map(_._1).mkString(",")}],"frame_sec":[${timed.map(_._2).mkString(",")}],"gc_ms":[${timed.map(_._3).mkString(",")}],"heap_peak_mb":$heapMb,"min":$min,"spread":$spread}"""
     }.mkString("{", ",", "}")
     writeArtifact(
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","runs_per_query":$runs,"warmup_discarded":true,"release_every":$releaseEvery,"errors":${errors.mkString("[", ",", "]")},"routed_to_lsh":$routedJson,"frames":$frames,"queries":$detail}""")
+      s"""{"metric":"total","value":$total,"unit":"sec","sf":${jsonString(sfDir)},"runs_per_query":$runs,"warmup_discarded":true,"release_every":$releaseEvery,"errors":${errors.mkString("[", ",", "]")},"routed_to_lsh":$routedJson,"frames":$frames,"queries":$detail}""")
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }
@@ -308,9 +242,9 @@ object Bench {
     val qs = names.map { n =>
       val xs = series(n).toSeq
       val ok = !xs.contains(-1.0)
-      s""""$n":{"runs":[${xs.mkString(",")}],"gc_ms":[${gcSeries(n).mkString(",")}],"min":${if (ok) xs.min else -1.0},"median":${if (ok) med(xs) else -1.0}}"""
+      s"""${jsonString(n)}:{"runs":[${xs.mkString(",")}],"gc_ms":[${gcSeries(n).mkString(",")}],"min":${if (ok) xs.min else -1.0},"median":${if (ok) med(xs) else -1.0}}"""
     }.mkString("{", ",", "}")
-    val line = s"""{"metric":"ab","rounds":$rounds,"unit":"sec","sf":"$sfDir","order":[${names.map("\"" + _ + "\"").mkString(",")}],"queries":$qs}"""
+    val line = s"""{"metric":"ab","rounds":$rounds,"unit":"sec","sf":${jsonString(sfDir)},"order":[${names.map(jsonString).mkString(",")}],"queries":$qs}"""
     println(line)
     writeArtifact(line)
     spark.stop()

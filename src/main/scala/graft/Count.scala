@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic CLI: print the row count (and wall time) of named
   * registered queries at a fixture dir — the probe companion to Bench
   * when the question is "how BIG is this intermediate", not "how
@@ -9,21 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Count {
   def main(args: Array[String]): Unit = {
     val dir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // scan-parallelism floor — same rationale and knobs as Bench
-    val minScan = sys.env.getOrElse("SPARK_GRAFT_MIN_SCAN_PARTITIONS",
-      (cpus.toInt * 2).toString)
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-    val spark = (if (minScan.toInt > 0)
-      b0.config("spark.sql.files.minPartitionNum", minScan) else b0)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-count", Some(dir))
     if (sys.env.contains("SPARK_GRAFT_STAGE_LOG"))
       spark.sparkContext.addSparkListener(
         new org.apache.spark.scheduler.SparkListener {

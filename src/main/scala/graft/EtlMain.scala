@@ -5,7 +5,6 @@ import graft.logging.StructuredLogger
 import graft.sinks.ClickHouseHttpClient
 import graft.sources.PrometheusHttpClient
 import graft.streaming.EtlPipeline
-import org.apache.spark.sql.SparkSession
 
 /** Application entry point — reference main.py:41-86 as a Spark
   * submittable main: env config → clients → ONE pipeline iteration
@@ -31,11 +30,7 @@ object EtlMain {
       val expr = args.lift(3).getOrElse("""{__name__=~".+"}""")
       val jobId = args.lift(4).getOrElse("etl")
 
-      val spark = SparkSession.builder()
-        .appName("graft-etl")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
+      val spark = Harness.session("graft-etl")
       try {
         val closed = EtlPipeline.runOnce(
           spark, app, jobId, expr, inDir, outDir, ledgerDir,

@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.PrometheusJson
-import org.apache.spark.sql.SparkSession
 
 /** Spark twin of tools/refbench.py: parse the SAME query_range fixture
   * through PrometheusJson (from_json + explode + TSV rendering) and
@@ -9,20 +8,15 @@ import org.apache.spark.sql.SparkSession
   * single-threaded reference loop) and local[N] (the actual deployment
   * shape). Run refbench.py first — it writes the fixture.
   *
-  * `sbt "runMain graft.IngestBench [fixturePath] [cpus]"`
+  * `sbt "runMain graft.IngestBench [fixturePath]"` — the session comes
+  * from [[Harness]]; `SPARK_GRAFT_CPUS=1` gives the per-core run.
   */
 object IngestBench {
   def main(args: Array[String]): Unit = {
+    require(args.length <= 1, "usage: IngestBench [fixturePath] " +
+      "(the core count is SPARK_GRAFT_CPUS, no longer an argument)")
     val fixture = args.headOption.getOrElse("/tmp/prom_ingest_bench.json")
-    val cpus = args.lift(1).getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("graft-ingest-bench")
 
     def run(): (Long, Double) = {
       val t0 = System.nanoTime()
@@ -41,7 +35,7 @@ object IngestBench {
     }
     run() // warmup (codegen + parquet/json paths)
     val (rows, sec) = run()
-    println(s"""{"engine":"graft PrometheusJson local[$cpus]","rows":$rows,"sec":${math.round(sec * 1000) / 1000.0},"rows_per_sec":${math.round(rows / sec)}}""")
+    println(s"""{"engine":"graft PrometheusJson ${spark.sparkContext.master}","rows":$rows,"sec":${math.round(sec * 1000) / 1000.0},"rows_per_sec":${math.round(rows / sec)}}""")
     spark.stop()
   }
 }

@@ -27,7 +27,9 @@ import org.apache.spark.sql.streaming.Trigger
   * Bench, SPARK_GRAFT_BENCH_RUNS), plus the duplicate fraction so the
   * dedup number is interpretable.
   *
-  * `sbt "runMain graft.StreamBench [nSeries] [pointsPerDoc] [nDocs] [cpus]"`
+  * `sbt "runMain graft.StreamBench [nSeries] [pointsPerDoc] [nDocs]"` —
+  * the session comes from [[Harness]]; set `SPARK_GRAFT_CPUS` for the
+  * core count.
   */
 object StreamBench {
 
@@ -128,20 +130,15 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
+    require(args.length <= 3, "usage: StreamBench [nSeries] [pointsPerDoc] " +
+      "[nDocs] (the core count is SPARK_GRAFT_CPUS, no longer an argument)")
     val nSeries = args.headOption.map(_.toInt).getOrElse(500)
     val pointsPerDoc = args.lift(1).map(_.toInt).getOrElse(120)
     val nDocs = args.lift(2).map(_.toInt).getOrElse(32)
-    val cpus = args.lift(3).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
     val overlapPts = pointsPerDoc / 5 // 20% re-delivery, like a 60 s overlap on a 300 s window
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("graft-stream-bench")
 
     sys.env.get("SPARK_GRAFT_STREAM_SWEEP") match {
       case Some(list) =>
@@ -269,7 +266,7 @@ object StreamBench {
         s""""$n":${math.round(totalRows / sec)}"""
       }
       .mkString(",")
-    println(s"""{"metric":"stream_ingest_rows_per_sec","value":${math.round(totalRows / results.head._2)},"unit":"rows/s","paths":{$perPath},"neardup_docs_per_sec":$nearDupRate,"neardup_corpus_docs":$nDocsCorpus,"rows":$totalRows,"unique_rows":$uniqueRows,"docs":$nDocs,"micro_batches":${(nDocs + 3) / 4},"cpus":"$cpus"}""")
+    println(s"""{"metric":"stream_ingest_rows_per_sec","value":${math.round(totalRows / results.head._2)},"unit":"rows/s","paths":{$perPath},"neardup_docs_per_sec":$nearDupRate,"neardup_corpus_docs":$nDocsCorpus,"rows":$totalRows,"unique_rows":$uniqueRows,"docs":$nDocs,"micro_batches":${(nDocs + 3) / 4},"cpus":"${Harness.cpus}"}""")
     spark.stop()
   }
 }

@@ -359,6 +359,10 @@ object AnnIndex {
       tiers: Seq[Int], k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(tiers.nonEmpty && tiers.forall(_ >= 1))
+    // a repeated tier would put copies of its candidates into one
+    // (query_id, np) rank partition and corrupt that tier's top-k
+    require(tiers.distinct == tiers,
+      s"queryTiers: duplicate tiers in ${tiers.mkString(",")}")
     val maxNp = tiers.max
     val q = queries.select(col("query_id"),
       transform(col("embedding"),

@@ -57,9 +57,12 @@ object StructuredLogger {
     sb.toString
   }
 
+  /** `s` as a quoted, escaped JSON string literal. */
+  def jsonString(s: String): String = "\"" + jsonEscape(s) + "\""
+
   private def jsonValue(v: Any): String = v match {
     case null => "null"
-    case s: String => "\"" + jsonEscape(s) + "\""
+    case s: String => jsonString(s)
     case b: Boolean => b.toString
     case n: Byte => n.toString
     case n: Short => n.toString

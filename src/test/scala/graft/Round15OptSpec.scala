@@ -33,6 +33,17 @@ class Round15OptSpec extends SparkSpec {
     assert(got === rows(old))
   }
 
+  test("AnnIndex.queryTiers rejects a duplicate tier") {
+    val root = graft.index.AnnIndex.ensure(spark, dir)
+    val queries = Tables.fanOut(Tables.embeddings(spark, dir))
+      .filter(col("vec_id") < 8)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    val e = intercept[IllegalArgumentException] {
+      graft.index.AnnIndex.queryTiers(spark, root, queries, Seq(1, 2, 2), k = 5)
+    }
+    assert(e.getMessage.contains("duplicate tiers"))
+  }
+
   test("q_dup_span: pinned against an inline re-expression (r15 — the " +
       "materialize-once variant was measured SLOWER and reverted; this " +
       "pin guards whatever form ships)") {

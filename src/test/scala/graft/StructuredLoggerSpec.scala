@@ -60,10 +60,10 @@ class StructuredLoggerSpec extends AnyFunSuite {
 
   test("JSON escaping: quotes, backslashes, control characters") {
     val (log, out, _) = capture()
-    log.info("""a "quoted" \ path""" + "\n\ttail", Map("k" -> ("v" + 1.toChar)))
+    log.info("""a "quoted" \ path""" + "\r\n\ttail", Map("k" -> ("v" + 1.toChar)))
     val line = lines(out).head
     // the line must be parseable JSON — round-trip the escapes manually
-    assert(line.contains("""a \"quoted\" \\ path\n\ttail"""))
+    assert(line.contains("""a \"quoted\" \\ path\r\n\ttail"""))
     assert(line.contains("\"k\":\"v\\u0001\""))
   }
 
