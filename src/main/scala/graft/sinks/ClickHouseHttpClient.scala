@@ -11,6 +11,7 @@ import java.nio.file.{Files, Path, Paths}
 import java.time.Duration
 import java.util.Base64
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 final class ClickHouseHttpException(
     val statusCode: Int,
@@ -175,10 +176,12 @@ final class ClickHouseHttpClient(
     * in sorted order for deterministic logs; order does not matter for
     * correctness (content-hash idempotency). */
   def loadDir(dir: String): Int = {
-    val parts = Files.list(Paths.get(dir)).iterator().asScala
-      .filter(p => p.getFileName.toString.startsWith("part-"))
-      .filterNot(p => p.getFileName.toString.endsWith(".crc"))
-      .toSeq.sortBy(_.getFileName.toString)
+    val parts = Using.resource(Files.list(Paths.get(dir))) { paths =>
+      paths.iterator().asScala
+        .filter(p => p.getFileName.toString.startsWith("part-"))
+        .filterNot(p => p.getFileName.toString.endsWith(".crc"))
+        .toSeq.sortBy(_.getFileName.toString)
+    }
     parts.foreach(p => insertFromFile(p.toString))
     parts.size
   }

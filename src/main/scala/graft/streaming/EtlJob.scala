@@ -2,13 +2,16 @@ package graft.streaming
 
 import graft.logging.StructuredLogger
 import graft.sources.PrometheusJson
-import org.apache.spark.sql.{Encoders, Observation, SparkSession}
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's main batch loop (etl_job.py run(): load state → calc
   * window → fetch → transform → bulk insert → save state) as a
   * runnable Spark job over a response drop-directory, with the ledger
-  * kept in parquet instead of a ClickHouse table. Each `runOnce` is one
+  * kept in parquet instead of a ClickHouse table. Spark decodes the
+  * drop-dir and writes the TSV; the ledger is read and appended on the
+  * driver ([[LedgerFiles]]), like the reference's single-row state
+  * statements, so no ledger touch is a Spark job. Each `runOnce` is one
   * loop iteration; progress survives restarts through the ledger — the
   * same crash-recovery contract as the reference (an aborted run leaves
   * no closed record, so the next run resumes from the previous valid
@@ -37,23 +40,17 @@ object EtlJob {
         r.timestampEnd.exists(_ > r.timestampStart))
       .maxByOption(r => (r.timestampStart, r.seq))
 
-  /** One snapshot of the ledger: a single scan with the record schema
-    * given up front (no footer read to infer it), collected to the
-    * driver — the ledger is a handful of small records per iteration,
-    * and every decision of a gate is taken on the same snapshot. */
-  def readLedger(spark: SparkSession, ledgerDir: String): Seq[LedgerRecord] = {
-    import spark.implicits._
-    if (new java.io.File(ledgerDir).exists())
-      spark.read.schema(Encoders.product[LedgerRecord].schema)
-        .parquet(ledgerDir).as[LedgerRecord].collect().toSeq
-    else Nil
-  }
+  /** One snapshot of the ledger, read on the driver — the ledger is a
+    * handful of small records per iteration, and every decision of a
+    * gate is taken on the same snapshot. */
+  def readLedger(ledgerDir: String): Seq[LedgerRecord] =
+    LedgerFiles.read(ledgerDir).records
 
   /** R8 probe over the persisted ledger (has_running_job,
     * clickhouse_client.py:440-524): any (job, start) whose latest
     * record is still open means a run is in flight (or died mid-run). */
-  def hasRunningJob(spark: SparkSession, ledgerDir: String): Boolean =
-    JobStateMachine.runningJobs(readLedger(spark, ledgerDir)).nonEmpty
+  def hasRunningJob(ledgerDir: String): Boolean =
+    JobStateMachine.runningJobs(readLedger(ledgerDir)).nonEmpty
 
   /** seq = max(existing)+1, NOT System.nanoTime(): nanoTime has an
     * arbitrary per-boot origin, so after a reboot (the crash-recovery
@@ -70,13 +67,12 @@ object EtlJob {
     * record it wrote) and the rest get None — the reference's
     * INSERT-with-subquery CAS, with the same "any running job blocks"
     * breadth. */
-  def tryMarkStart(spark: SparkSession, conf: EtlConfig, jobId: String,
+  def tryMarkStart(conf: EtlConfig, jobId: String,
                    ledgerDir: String, initialProgress: Long, now: Long,
                    logger: StructuredLogger = defaultLogger)
       : Option[LedgerRecord] = {
-    import spark.implicits._
     LedgerLock.withLock(ledgerDir) {
-      val ledger0 = readLedger(spark, ledgerDir)
+      val ledger0 = readLedger(ledgerDir)
       val running = JobStateMachine.runningJobs(ledger0)
       if (running.nonEmpty) {
         logger.info(s"Found ${running.size} running job(s)", Map(
@@ -90,7 +86,7 @@ object EtlJob {
         val (records, _) = JobStateMachine.step(
           jobId, progress, BatchEvent(jobId, now, 0L, 0L), conf)
         val open = records.head.copy(seq = maxSeq(ledger0) + 1L)
-        Seq(open).toDS().write.mode("append").parquet(ledgerDir)
+        LedgerFiles.append(ledgerDir, Seq(open))
         Some(open)
       }
     }
@@ -106,7 +102,8 @@ object EtlJob {
     *     the caller already fetched a window (`fetchedWindow`), a
     *     different one means another run closed a window since the
     *     fetch: refuse before anything is written
-    *  3. append the OPEN record — mark-start; a crash after this point
+    *  3. append the OPEN record — mark-start, in the same file as a
+    *     takeover's abort closes; a crash after this point
     *     leaves the open record as the tombstone the next gate trips
     *     on, exactly like the reference
     *  4. decode the drop-dir responses once, fail on a malformed one,
@@ -119,7 +116,8 @@ object EtlJob {
     * Returns the closed record it wrote. The completion event carries
     * the stage durations: `gate_ms` (steps 1-3, lock wait included),
     * `parse_ms` (the decode and its validity check) and `write_ms` (the
-    * point explode, TSV write and mark-end).
+    * point explode, TSV write and mark-end), and `ledger_files`, the
+    * part files the gate's snapshot read.
     */
   def runOnce(spark: SparkSession, conf: EtlConfig, jobId: String,
               inDir: String, outDir: String, ledgerDir: String,
@@ -127,16 +125,17 @@ object EtlJob {
               force: Boolean = false,
               logger: StructuredLogger = defaultLogger,
               fetchedWindow: Option[(Long, Long)] = None): LedgerRecord = {
-    import spark.implicits._
     val t0 = System.nanoTime()
     def msSince(t: Long): Long = (System.nanoTime() - t) / 1000000L
     // --- critical section: gate + mark-start are atomic across
     // processes; everything after rides on the open record ---
-    val (progress, (start, end), closedSeq) = LedgerLock.withLock(ledgerDir) {
+    val (progress, (start, end), closedSeq, ledgerFiles) =
+        LedgerLock.withLock(ledgerDir) {
       // one ledger snapshot serves the gate, the takeover list, progress
       // and the seq stamps — every check below is decided before the
       // first append
-      val ledger0 = readLedger(spark, ledgerDir)
+      val snapshot = LedgerFiles.read(ledgerDir)
+      val ledger0 = snapshot.records
       var nextSeq = maxSeq(ledger0) + 1L
       def stamp(r: LedgerRecord): LedgerRecord = {
         val s = nextSeq; nextSeq += 1L; r.copy(seq = s)
@@ -156,16 +155,16 @@ object EtlJob {
       // close — end set (stops counting as running) but progress NULL
       // (state reads never resume from it). Other jobs' in-flight runs
       // are untouched. The reference-side equivalent is the operator
-      // inserting a closing row by hand.
-      if (mine.nonEmpty)
-        mine.map { case (jid, start) =>
-          stamp(LedgerRecord(jid, start, Some(math.max(now, start + 1)),
-            None, None, None, None))
-        }.toDS().write.mode("append").parquet(ledgerDir)
+      // inserting a closing row by hand. The abort closes and the open
+      // record go into one file: one atomic append.
+      val aborts = mine.map { case (jid, start) =>
+        stamp(LedgerRecord(jid, start, Some(math.max(now, start + 1)),
+          None, None, None, None))
+      }
       val (records, _) = JobStateMachine.step(
         jobId, progress, BatchEvent(jobId, now, 0L, 0L), conf)
-      Seq(stamp(records.head)).toDS().write.mode("append").parquet(ledgerDir)
-      (progress, window, nextSeq)
+      LedgerFiles.append(ledgerDir, aborts :+ stamp(records.head))
+      (progress, window, nextSeq, snapshot.files)
     }
     val gateMs = msSince(t0)
 
@@ -214,7 +213,7 @@ object EtlJob {
       val closed = JobStateMachine.step(
         jobId, progress, BatchEvent(jobId, now, rows, skipped), conf)
         ._1.last.copy(seq = closedSeq)
-      Seq(closed).toDS().write.mode("append").parquet(ledgerDir)
+      LedgerFiles.append(ledgerDir, Seq(closed))
       logger.info("ETL batch completed", Map(
         "etl_job.batch_completed.job_id" -> jobId,
         "etl_job.batch_completed.rows" -> rows,
@@ -225,7 +224,8 @@ object EtlJob {
           closed.batchWindowSeconds.getOrElse(-1L),
         "etl_job.batch_completed.gate_ms" -> gateMs,
         "etl_job.batch_completed.parse_ms" -> parseMs,
-        "etl_job.batch_completed.write_ms" -> msSince(t2)))
+        "etl_job.batch_completed.write_ms" -> msSince(t2),
+        "etl_job.batch_completed.ledger_files" -> ledgerFiles))
       closed
     } catch {
       case e: Exception =>

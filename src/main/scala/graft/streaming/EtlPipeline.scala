@@ -51,7 +51,7 @@ object EtlPipeline {
       logger.info("Ensured ClickHouse schema", Map(
         "etl_pipeline.ensure_tables.statements" -> stmts.size))
     }
-    val progress = EtlJob.latestState(EtlJob.readLedger(spark, ledgerDir))
+    val progress = EtlJob.latestState(EtlJob.readLedger(ledgerDir))
       .flatMap(_.timestampProgress).getOrElse(initialProgress)
     val (start, end) = JobStateMachine.calcWindow(progress, conf)
 

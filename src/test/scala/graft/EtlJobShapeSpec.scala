@@ -14,12 +14,13 @@ import java.io.{ByteArrayOutputStream, PrintStream}
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
-/** The Spark job shape of one ETL iteration, pinned: the ledger is
-  * scanned once (one snapshot serves the gate, progress and seq), it
-  * gets exactly two appends (mark-start, mark-end), and each response
+/** The Spark job shape of one ETL iteration, pinned: no Spark execution
+  * touches the ledger (it is read and appended on the driver), an
+  * iteration adds exactly two ledger files (mark-start, mark-end; a
+  * takeover's abort closes share the mark-start file), and each response
   * document is JSON-decoded once however many actions consume it. A
-  * regression that re-reads the ledger or re-parses the drop-dir fails
-  * here, not only in a benchmark. */
+  * regression that moves the ledger back into Spark, splits an append or
+  * re-parses the drop-dir fails here, not only in a benchmark. */
 class EtlJobShapeSpec extends SparkSpec {
 
   private val conf = EtlConfig(
@@ -48,7 +49,11 @@ class EtlJobShapeSpec extends SparkSpec {
   private def under(path: org.apache.hadoop.fs.Path, dir: String) =
     path.toUri.getPath.stripSuffix("/") == dir
 
-  test("one runOnce: one ledger scan, two ledger appends, one JSON decode") {
+  private def ledgerFiles(dir: String): Int =
+    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .count(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+
+  test("one runOnce: no ledger Spark jobs, two ledger files, one JSON decode") {
     val inDir = tmpDir("shape_in")
     val outDir = tmpDir("shape_out") + "/tsv"
     val ledgerDir = tmpDir("shape_ledger") + "/ledger"
@@ -68,6 +73,7 @@ class EtlJobShapeSpec extends SparkSpec {
     }
     ListenerBusDrain(spark.sparkContext)
     spark.listenerManager.register(listener)
+    val files0 = ledgerFiles(ledgerDir)
     val r = try {
       val r = EtlJob.runOnce(spark, conf, "job", inDir, outDir, ledgerDir,
         initialProgress = -1, now = 2000, logger = quietLogger)
@@ -75,6 +81,7 @@ class EtlJobShapeSpec extends SparkSpec {
       r
     } finally spark.listenerManager.unregister(listener)
     assert(r.timestampStart == 1080 && r.batchRows.contains(1L))
+    assert(ledgerFiles(ledgerDir) - files0 == 2, "ledger files added")
 
     val execs = seen.asScala.toSeq
     val plans = execs.map(qe => nodes(qe.executedPlan))
@@ -82,12 +89,12 @@ class EtlJobShapeSpec extends SparkSpec {
       case s: FileSourceScanExec => s.relation.location.rootPaths.exists(under(_, dir))
       case _ => false
     }
-    assert(plans.count(scans(ledgerDir)) == 1, "ledger scans")
+    assert(plans.count(scans(ledgerDir)) == 0, "ledger scans")
     val appends = execs.count(qe => nodes(qe.logical).exists {
       case w: InsertIntoHadoopFsRelationCommand => under(w.outputPath, ledgerDir)
       case _ => false
     })
-    assert(appends == 2, "ledger appends")
+    assert(appends == 0, "ledger appends")
 
     // distinct plan nodes over the drop dir: the cached decode is one
     // instance however many actions read it
@@ -99,5 +106,22 @@ class EtlJobShapeSpec extends SparkSpec {
     val decodes = distinct.flatMap(_.expressions)
       .map(_.collect { case j: JsonToStructs => j }.size).sum
     assert(decodes == 1, "JsonToStructs over the drop-dir scan")
+  }
+
+  test("a force takeover adds two ledger files: aborts + open, then closed") {
+    val inDir = tmpDir("shape_takeover_in")
+    val outDir = tmpDir("shape_takeover_out") + "/tsv"
+    val ledgerDir = tmpDir("shape_takeover_ledger") + "/ledger"
+    // a crashed run of the same job: its open record is never closed
+    assert(EtlJob.tryMarkStart(conf, "job", ledgerDir, initialProgress = 1000,
+      now = 2000, quietLogger).isDefined)
+    val files0 = ledgerFiles(ledgerDir)
+    val r = EtlJob.runOnce(spark, conf, "job", inDir, outDir, ledgerDir,
+      initialProgress = 1000, now = 2000, force = true, logger = quietLogger)
+    assert(r.timestampProgress.contains(1090L))
+    assert(ledgerFiles(ledgerDir) - files0 == 2, "ledger files added")
+    // the abort close, the new open record and the closed record
+    assert(EtlJob.readLedger(ledgerDir).size == 4)
+    assert(!EtlJob.hasRunningJob(ledgerDir))
   }
 }

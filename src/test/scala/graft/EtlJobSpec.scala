@@ -49,7 +49,7 @@ class EtlJobSpec extends SparkSpec {
     assert(spark.read.text(outDir).count() == 4)
 
     // latestState picks the newest valid record
-    val st = EtlJob.latestState(EtlJob.readLedger(spark, ledgerDir))
+    val st = EtlJob.latestState(EtlJob.readLedger(ledgerDir))
     assert(st.exists(_.timestampStart == 1080))
   }
 
@@ -79,9 +79,9 @@ class EtlJobSpec extends SparkSpec {
     Seq(LedgerRecord("job", 500, None, None, None, None, None))
       .toDS().write.mode("append").parquet(ledgerDir)
     // invalid for state reads → progress falls back to initial
-    assert(EtlJob.latestState(EtlJob.readLedger(spark, ledgerDir)).isEmpty)
+    assert(EtlJob.latestState(EtlJob.readLedger(ledgerDir)).isEmpty)
     // and the R8 gate refuses to start a new run...
-    assert(EtlJob.hasRunningJob(spark, ledgerDir))
+    assert(EtlJob.hasRunningJob(ledgerDir))
     intercept[IllegalStateException] {
       EtlJob.runOnce(spark, conf, "job", inDir, outDir, ledgerDir,
         initialProgress = 500, now = 2000)
@@ -91,7 +91,7 @@ class EtlJobSpec extends SparkSpec {
     val r = EtlJob.runOnce(spark, conf, "job", inDir, outDir, ledgerDir,
       initialProgress = 500, now = 2000, force = true)
     assert(r.timestampStart == 490 && r.batchRows.contains(1L))
-    assert(!EtlJob.hasRunningJob(spark, ledgerDir))
+    assert(!EtlJob.hasRunningJob(ledgerDir))
   }
 
   test("gate is per-job: one job's crash never blocks another job") {
@@ -108,7 +108,7 @@ class EtlJobSpec extends SparkSpec {
       initialProgress = 1000, now = 2000)
     assert(r.jobId == "jobB")
     assert(JobStateMachine.runningJobs(
-      EtlJob.readLedger(spark, ledgerDir)).toSet ==
+      EtlJob.readLedger(ledgerDir)).toSet ==
       Set(("jobA", 500L)))
   }
 }

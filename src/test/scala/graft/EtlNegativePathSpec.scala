@@ -55,9 +55,9 @@ class EtlNegativePathSpec extends SparkSpec {
     }
     // the crash happened AFTER mark-start, BEFORE mark-end: the open
     // record is the tombstone (organically produced, not planted)...
-    assert(EtlJob.hasRunningJob(spark, ledgerDir))
+    assert(EtlJob.hasRunningJob(ledgerDir))
     // ...and it is invalid for state reads, so progress did NOT advance
-    assert(EtlJob.latestState(EtlJob.readLedger(spark, ledgerDir)).isEmpty)
+    assert(EtlJob.latestState(EtlJob.readLedger(ledgerDir)).isEmpty)
 
     // a plain re-run trips the R8 gate
     intercept[IllegalStateException] {
@@ -73,7 +73,7 @@ class EtlNegativePathSpec extends SparkSpec {
     assert(r.timestampStart == 990, "takeover must retry the same window")
     assert(r.timestampProgress.contains(1090))
     assert(r.batchRows.contains(2L))
-    assert(!EtlJob.hasRunningJob(spark, ledgerDir))
+    assert(!EtlJob.hasRunningJob(ledgerDir))
   }
 
   test("fetch failure aborts BEFORE mark-start: no tombstone, no force needed") {
@@ -119,7 +119,7 @@ class EtlNegativePathSpec extends SparkSpec {
             ledgerDir, initialProgress = 1000, now = 5000, prom, ch,
             logger = quietLogger)
         }
-        assert(!EtlJob.hasRunningJob(spark, ledgerDir),
+        assert(!EtlJob.hasRunningJob(ledgerDir),
           "a fetch failure must not leave an open ledger record")
       }
       // third run succeeds WITHOUT force, from the original progress
@@ -171,9 +171,9 @@ class EtlNegativePathSpec extends SparkSpec {
       assert(e.getMessage.contains("fetched window"))
       // refused before mark-start: no open record, nothing appended,
       // progress is where the other run left it, nothing was loaded
-      assert(!EtlJob.hasRunningJob(spark, ledgerDir))
-      assert(EtlJob.readLedger(spark, ledgerDir) == Seq(raced))
-      assert(EtlJob.latestState(EtlJob.readLedger(spark, ledgerDir))
+      assert(!EtlJob.hasRunningJob(ledgerDir))
+      assert(EtlJob.readLedger(ledgerDir) == Seq(raced))
+      assert(EtlJob.latestState(EtlJob.readLedger(ledgerDir))
         .flatMap(_.timestampProgress).contains(1100L))
       assert(chPosts.get == 0)
     } finally { promServer.stop(0); chServer.stop(0) }
@@ -225,8 +225,8 @@ class EtlNegativePathSpec extends SparkSpec {
           ledgerDir, initialProgress = 1000, now = 5000, prom, ch,
           logger = quietLogger)
       }
-      assert(!EtlJob.hasRunningJob(spark, ledgerDir))
-      val st = EtlJob.latestState(EtlJob.readLedger(spark, ledgerDir))
+      assert(!EtlJob.hasRunningJob(ledgerDir))
+      val st = EtlJob.latestState(EtlJob.readLedger(ledgerDir))
       assert(st.flatMap(_.timestampProgress).contains(1100L),
         "mark-end precedes the load: progress must be kept")
 
@@ -305,8 +305,8 @@ class EtlNegativePathSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("malformed response document"))
     // mid-batch position: open tombstone, progress untouched
-    assert(EtlJob.hasRunningJob(spark, ledgerDir))
-    assert(EtlJob.latestState(EtlJob.readLedger(spark, ledgerDir)).isEmpty)
+    assert(EtlJob.hasRunningJob(ledgerDir))
+    assert(EtlJob.latestState(EtlJob.readLedger(ledgerDir)).isEmpty)
 
     // operator repairs the drop dir, then force-takes-over
     java.nio.file.Files.delete(bad)
@@ -314,7 +314,7 @@ class EtlNegativePathSpec extends SparkSpec {
       initialProgress = 1000, now = 2000, force = true,
       logger = quietLogger)
     assert(r.batchRows.contains(1L))
-    assert(!EtlJob.hasRunningJob(spark, ledgerDir))
+    assert(!EtlJob.hasRunningJob(ledgerDir))
 
     // blank lines are NOT documents: a trailing newline must not trip
     // the gate (the next run over the same dir succeeds without force)

@@ -95,6 +95,9 @@ class EtlPipelineSpec extends SparkSpec {
         assert(("\"" + java.util.regex.Pattern.quote(k) + "\":[0-9]+").r
           .findFirstIn(log).isDefined, k)
       }
+      // the gate's snapshot saw iteration 1's open and closed records
+      assert("\"etl_job\\.batch_completed\\.ledger_files\":2[,}]".r
+        .findFirstIn(log).isDefined, log)
 
       // per-batch response files are cleaned up after the batch (the
       // reference's temp-file cleanup; keeps the drop-dir reparse O(1))

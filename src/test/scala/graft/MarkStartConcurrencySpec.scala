@@ -34,7 +34,7 @@ class MarkStartConcurrencySpec extends SparkSpec {
       pool.submit(new Runnable {
         def run(): Unit = try {
           barrier.await(30, TimeUnit.SECONDS)
-          val won = EtlJob.tryMarkStart(spark, conf, "job", ledgerDir,
+          val won = EtlJob.tryMarkStart(conf, "job", ledgerDir,
             initialProgress = 1000, now = 2000, quietLogger).isDefined
           results.add(won)
         } finally done.countDown()
@@ -46,21 +46,21 @@ class MarkStartConcurrencySpec extends SparkSpec {
     assert(results.size == n)
     assert(wins == 1, s"expected exactly 1 winner, got $wins")
     // the ledger holds exactly the winner's open record
-    val records = EtlJob.readLedger(spark, ledgerDir)
+    val records = EtlJob.readLedger(ledgerDir)
     assert(records.length == 1)
     assert(records.head.timestampEnd.isEmpty)
     // and the running-job probe now gates everyone
-    assert(EtlJob.hasRunningJob(spark, ledgerDir))
+    assert(EtlJob.hasRunningJob(ledgerDir))
   }
 
   test("tryMarkStart blocks while a job is running, allows after close") {
     val ledgerDir = tmpDir("cas_seq") + "/ledger"
-    val first = EtlJob.tryMarkStart(spark, conf, "job", ledgerDir,
+    val first = EtlJob.tryMarkStart(conf, "job", ledgerDir,
       initialProgress = 1000, now = 2000, quietLogger)
     assert(first.isDefined)
     // second attempt while open record stands → loses (any running job
     // blocks, the reference's breadth)
-    assert(EtlJob.tryMarkStart(spark, conf, "other_job", ledgerDir,
+    assert(EtlJob.tryMarkStart(conf, "other_job", ledgerDir,
       initialProgress = 1000, now = 2000, quietLogger).isEmpty)
     // close the run (mark-end), gate re-opens
     import spark.implicits._
@@ -72,7 +72,7 @@ class MarkStartConcurrencySpec extends SparkSpec {
       batchRows = Some(0L), batchSkippedCount = Some(0L),
       seq = open.seq + 1)
     Seq(closed).toDS().write.mode("append").parquet(ledgerDir)
-    assert(EtlJob.tryMarkStart(spark, conf, "other_job", ledgerDir,
+    assert(EtlJob.tryMarkStart(conf, "other_job", ledgerDir,
       initialProgress = 1000, now = 3000, quietLogger).isDefined)
   }
 
@@ -82,7 +82,7 @@ class MarkStartConcurrencySpec extends SparkSpec {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(inDir, "r.json"),
       """{"status":"success","data":{"resultType":"matrix","result":[]}}""")
-    assert(EtlJob.tryMarkStart(spark, conf, "job", ledgerDir,
+    assert(EtlJob.tryMarkStart(conf, "job", ledgerDir,
       initialProgress = 1000, now = 2000, quietLogger).isDefined)
     intercept[IllegalStateException] {
       EtlJob.runOnce(spark, conf, "job", inDir, tmpDir("cas_out") + "/tsv",
